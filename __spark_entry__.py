@@ -11,12 +11,13 @@ graph with CTEs.
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 _GRAPH_CACHE: dict = {}
 
@@ -3831,7 +3832,8 @@ def _mixture_oracle_sql() -> str:
 def _exact_bfs_with(max_hops: int) -> str:
     """Shared WITH RECURSIVE block: ``vv`` = vertex set, ``md`` =
     (root, node, d) minimum out-hop distances over ``knows``, bounded
-    at ``max_hops`` — the SQL twin of graph_algos._exact_out_dists.
+    at ``max_hops`` — the SQL twin of the all-vertex
+    ``traversal.bfs_distances`` behind graph_algos' ``exact=True``.
     Must live inside a subquery (outer ``pre`` WITH is not RECURSIVE)."""
     return (
         # DISTINCT-over-UNION-ALL: DuckDB 1.0 does not dedup a plain

@@ -3,8 +3,12 @@ sf0.1) on local[$SPARK_GRAFT_CPUS].
 
 Times each query end-to-end (full plan execution forced via a noop-style
 count over every column-dependent operator; results are tiny so collect
-is the action). Prints ONE JSON line:
+is the action). Prints ONE JSON line, also when something fails:
   {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
+
+A query that raises is recorded as ``{"error": "<Type>: <msg>"}`` under
+its key (excluded from the totals, counted in ``"errors"``) and the run
+goes on with the next one.
 
 Comparison target (BASELINE.md §6 note): the reference's set-oriented
 throughput rows, not its µs-scale point ops — see SURVEY.md §6.
@@ -16,6 +20,7 @@ import json
 import os
 import sys
 import time
+import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -104,6 +109,31 @@ _STORE_QUERIES = {
 }
 
 
+def _error(ex: BaseException) -> dict:
+    msg = str(ex).strip().splitlines()
+    return {"error": f"{type(ex).__name__}: {msg[0][:300] if msg else ''}"}
+
+
+def _timed(out: dict, name: str, fn):
+    """Run ``fn()`` and store its wall seconds in ``out[name]``; if it
+    raises, store ``_error(ex)`` there instead. Returns fn's result, or
+    None on failure."""
+    t0 = time.perf_counter()
+    try:
+        res = fn()
+    except Exception as ex:   # one bad query must not end the run
+        out[name] = _error(ex)
+        traceback.print_exc(file=sys.stderr)
+        print(f"# {name}: {out[name]['error']}", file=sys.stderr)
+        return None
+    out[name] = round(time.perf_counter() - t0, 3)
+    return res
+
+
+def _total(out: dict) -> float:
+    return round(sum(v for v in out.values() if not isinstance(v, dict)), 3)
+
+
 def _n_exchanges(df) -> int:
     import contextlib
     import io
@@ -137,21 +167,23 @@ def _bench_store(spark, sf_dir, timings, exchanges) -> None:
              + [(q, gb, "store") for q in _STORE_QUERIES]
         for key, graph, tag in jobs:
             name = f"{key}_{tag}"
-            t0 = time.perf_counter()
-            df = graph.cypher(_STORE_QUERIES[key])
-            n = df.count()
-            timings[name] = round(time.perf_counter() - t0, 3)
-            exchanges[name] = _n_exchanges(df)
-            print(f"# {name}: {timings[name]}s ({n} rows, "
+
+            def run(graph=graph, key=key):
+                df = graph.cypher(_STORE_QUERIES[key])
+                return df, df.count()
+            res = _timed(timings, name, run)
+            if res is None:
+                continue
+            exchanges[name] = _n_exchanges(res[0])
+            print(f"# {name}: {timings[name]}s ({res[1]} rows, "
                   f"{exchanges[name]} exchanges)", file=sys.stderr)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-
+def _suite(sf_dir: str, timings: dict, pipeline_timings: dict,
+           warm_timings: dict, store_timings: dict, store_exchanges: dict,
+           tp: dict) -> None:
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
@@ -181,20 +213,20 @@ def main() -> None:
 
     import gc
 
-    timings: dict[str, float] = {}
-    store_timings: dict[str, float] = {}
-    store_exchanges: dict[str, int] = {}
+    def count(name):
+        def run():
+            fn = BENCH_OVERRIDES.get(name) or qs[name]
+            # executes the full plan (aggregates/joins/loops)
+            return fn(spark, sf_dir).count()
+        return run
+
     for name in HEADLINE:
-        fn = BENCH_OVERRIDES.get(name) or qs[name]
-        t0 = time.perf_counter()
-        df = fn(spark, sf_dir)
-        n = df.count()  # executes the full plan (aggregates/joins/loops)
-        timings[name] = round(time.perf_counter() - t0, 3)
-        print(f"# {name}: {timings[name]}s ({n} rows)", file=sys.stderr)
+        n = _timed(timings, name, count(name))
+        if n is not None:
+            print(f"# {name}: {timings[name]}s ({n} rows)", file=sys.stderr)
         # Release py4j refs so the ContextCleaner can drop the previous
         # query's localCheckpoint blocks — otherwise storage memory and
         # GC pressure accumulate across the suite and later queries pay.
-        df = None
         gc.collect()
 
     # ---- round-3 pipeline operators, timed in their OWN dict so
@@ -202,7 +234,6 @@ def main() -> None:
     # composed curate() pass (filter→redact→dedup→split on a 1.2×
     # twinned corpus); d9 shuffles (hash,doc,pos) triples for the
     # first-occurrence window; e6/e8 are Arrow-matmul assignment scans.
-    pipeline_timings: dict[str, float] = {}
     # session-6 additions: SNM dedup (global-rank band join), funnel +
     # retention + rolling DAU (user-keyed event analytics), one-pass
     # profile, SCC + betweenness (driver-Tarjan / tree-Brandes at this
@@ -240,13 +271,10 @@ def main() -> None:
                  "o3_topk_group", "e13_mmr_topk", "k4_key_skew",
                  "r6_salted_join", "t23_vocab_coverage",
                  "w14_stream_cms", "s16_compact"]:
-        t0 = time.perf_counter()
-        df = qs[name](spark, sf_dir)
-        n = df.count()
-        pipeline_timings[name] = round(time.perf_counter() - t0, 3)
-        print(f"# {name}: {pipeline_timings[name]}s ({n} rows)",
-              file=sys.stderr)
-        df = None
+        n = _timed(pipeline_timings, name, count(name))
+        if n is not None:
+            print(f"# {name}: {pipeline_timings[name]}s ({n} rows)",
+                  file=sys.stderr)
         gc.collect()
 
     # ---- second (warm) pass over the headline suite. The cold pass
@@ -255,19 +283,18 @@ def main() -> None:
     # (Janino plan compilation, JIT, Python-worker spin-up) and from
     # this VM's ±40% wall-clock noise — on a long-lived cluster the
     # warm number is what repeated pipeline runs actually pay.
-    warm_timings: dict[str, float] = {}
     for name in HEADLINE:
-        fn = BENCH_OVERRIDES.get(name) or qs[name]
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).count()
-        warm_timings[name] = round(time.perf_counter() - t0, 3)
+        _timed(warm_timings, name, count(name))
         gc.collect()
-    print(f"# warm suite: {round(sum(warm_timings.values()), 3)}s",
-          file=sys.stderr)
+    print(f"# warm suite: {_total(warm_timings)}s", file=sys.stderr)
 
     # ---- durable-store variant of the hottest graph expands (separate
     # dicts: headline_suite_seconds stays comparable across rounds)
-    _bench_store(spark, sf_dir, store_timings, store_exchanges)
+    try:
+        _bench_store(spark, sf_dir, store_timings, store_exchanges)
+    except Exception as ex:   # snapshot set-up failed: no store rows
+        store_timings["_setup"] = _error(ex)
+        traceback.print_exc(file=sys.stderr)
 
     # ---- throughput rows comparable to BASELINE.md's set-oriented
     # metrics (elem/s). The reference's latency rows are µs point ops on
@@ -287,8 +314,6 @@ def main() -> None:
     # probe measures 2.1 M cold and ~14 M warm back-to-back on this VM.
     # BASELINE.md's reference numbers are steady-state set throughput,
     # so warm is the comparable measurement.
-    tp: dict[str, int] = {}
-
     def _scan():
         n = 50_000_000
         (spark.range(n)
@@ -321,20 +346,43 @@ def main() -> None:
     for key, probe in [("vertex_scan_elems_per_s", _scan),
                        ("batch_create_elems_per_s", _create),
                        ("one_hop_match_elems_per_s", _one_hop)]:
-        probe()                                   # warm-up, unmeasured
-        t0 = time.perf_counter()
-        n = probe()
-        tp[key] = int(n / (time.perf_counter() - t0))
+        try:
+            probe()                               # warm-up, unmeasured
+            t0 = time.perf_counter()
+            n = probe()
+            tp[key] = int(n / (time.perf_counter() - t0))
+        except Exception as ex:
+            tp[key] = _error(ex)
+            traceback.print_exc(file=sys.stderr)
     print(f"# throughput (warm): {tp}", file=sys.stderr)
 
-    total = round(sum(timings.values()), 3)
-    print(json.dumps({
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    timings: dict = {}
+    pipeline_timings: dict = {}
+    warm_timings: dict = {}
+    store_timings: dict = {}
+    store_exchanges: dict = {}
+    tp: dict = {}
+    failure = None
+    try:
+        _suite(sf_dir, timings, pipeline_timings, warm_timings,
+               store_timings, store_exchanges, tp)
+    except Exception as ex:   # set-up failed: still print what ran
+        failure = _error(ex)
+        traceback.print_exc(file=sys.stderr)
+        print(f"# bench aborted: {failure['error']}", file=sys.stderr)
+
+    sections = (timings, pipeline_timings, warm_timings, store_timings, tp)
+    out = {
         "metric": "headline_suite_seconds",
-        "value": total,
+        "value": _total(timings),
         "unit": "sec",
         "queries": timings,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "warm_suite_seconds": round(sum(warm_timings.values()), 3),
+        "warm_suite_seconds": _total(warm_timings),
         "queries_warm": warm_timings,
         "pipeline_queries_sec": pipeline_timings,
         "store_queries_sec": store_timings,
@@ -345,7 +393,14 @@ def main() -> None:
             "batch_create_elems_per_s": 100600,
             "one_hop_match_elems_per_s": 357000,
         },
-    }))
+        "errors": sum(isinstance(v, dict)
+                      for d in sections for v in d.values()),
+    }
+    if failure is not None:
+        out["error"] = failure["error"]
+    print(json.dumps(out))
+    if failure is not None:
+        sys.exit(1)
 
 
 if __name__ == "__main__":

@@ -15,19 +15,25 @@ the whole-graph analytics a training-data pipeline needs:
 Scale notes: components uses the large-star/small-star algorithm
 (Kiveris et al., "Connected Components in MapReduce and Beyond",
 SoCC'14) — O(log² n) rounds, each round two self-joins + a min-agg, no
-driver-side state beyond the convergence counter. PageRank keeps ranks
-and links as two DataFrames joined per iteration with
-``localCheckpoint`` lineage truncation; at cluster scale both sides
-should be co-partitioned on vertex id so the per-iteration join is
-shuffle-free on the link side.
+driver-side state beyond the convergence counter. Each superstep family
+has ONE loop (a superstep = one vertex⋈message join + one group-by, as
+in Pregelix): ``_pagerank_loop`` serves plain, weighted and personalized
+PageRank (the teleport weight is a ``reset`` column of the vertex
+frame), always co-partitioned on vertex id so each iteration pays one
+Exchange; ``_hyperball`` serves the neighborhood function and harmonic /
+closeness centrality; their ``exact=True`` oracles run
+``traversal.bfs_distances`` rooted at every vertex.
 """
 
 from __future__ import annotations
 
+from itertools import accumulate
 from typing import Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from rust_graph_db_spark.operators.traversal import bfs_distances
 
 
 def _pair_cols(edges: DataFrame) -> tuple:
@@ -290,19 +296,11 @@ def degrees(edges: DataFrame) -> DataFrame:
             .withColumn("deg", F.col("out_deg") + F.col("in_deg")))
 
 
-# Co-partitioned mode is the default at EVERY size: paired warm trials
-# at sf0.1 (16.5k edges, 8 iterations) measured it ~25% faster than the
-# AQE-on/auto-broadcast plain loop even on tiny graphs — per-iteration
-# adaptive re-planning and broadcast rebuilds cost more than a pinned
-# single-partition pipeline. ``copartition=False`` remains as an
-# explicit opt-out (and keeps the parity test honest).
-
-
-def _pr_frames(e: DataFrame, nparts: Optional[int],
+def _pr_frames(e: DataFrame, nparts: int,
                weighted: bool = False) -> tuple:
-    """(verts, links) for the PageRank loop, optionally pinned to a
-    shared HashPartitioning on vertex id (``localCheckpoint`` captures
-    the layout in the LogicalRDD, so every iteration reuses it).
+    """(verts, links) for the PageRank loop, pinned to a shared
+    HashPartitioning on vertex id (``localCheckpoint`` captures the
+    layout in the LogicalRDD, so every iteration reuses it).
     ``weighted`` links carry (dst, w) structs + the out-weight total."""
     verts = (e.select(F.col("src").alias("id"))
              .unionAll(e.select(F.col("dst").alias("id")))
@@ -317,16 +315,18 @@ def _pr_frames(e: DataFrame, nparts: Optional[int],
                       F.sum("w").alias("tw")))
     else:
         links = e.groupBy("src").agg(F.collect_list("dst").alias("nbrs"))
-    if nparts:
-        verts = verts.repartition(nparts, F.col("id"))
-        links = links.repartition(nparts, F.col("src"))
+    verts = verts.repartition(nparts, F.col("id"))
+    links = links.repartition(nparts, F.col("src"))
     return (verts.localCheckpoint(eager=True),
             links.localCheckpoint(eager=True))
 
 
 def _pr_step(verts: DataFrame, links: DataFrame, r: DataFrame,
              damping: float, weighted: bool = False) -> DataFrame:
-    """One damped-PageRank iteration (pure plan — no action)."""
+    """One damped-PageRank iteration (pure plan — no action):
+    rank = (1-d)·reset + d·Σc, with the teleport weight ``reset`` read
+    from ``verts`` (1.0 everywhere for plain PageRank — bit-identical
+    to (1-d) + d·Σc — and 1/|S| on the source set for PPR)."""
     if weighted:
         contribs = (links.join(r, links["src"] == r["id"])
                     .select(F.explode("nbrs").alias("nb"),
@@ -341,14 +341,13 @@ def _pr_step(verts: DataFrame, links: DataFrame, r: DataFrame,
                     .groupBy("id").agg(F.sum("c").alias("c")))
     return (verts.join(contribs, "id", "left")
             .select("id",
-                    (F.lit(1.0 - damping)
+                    (F.lit(1.0 - damping) * F.col("reset")
                      + F.lit(damping) * F.coalesce("c", F.lit(0.0))
                      ).alias("rank")))
 
 
 def pagerank(edges: DataFrame, iterations: int = 10,
              damping: float = 0.85,
-             copartition: Optional[bool] = None,
              weight_col: Optional[str] = None) -> DataFrame:
     """Classic damped PageRank over a (src, dst) edge list.
 
@@ -357,11 +356,11 @@ def pagerank(edges: DataFrame, iterations: int = 10,
     redistribution, so ranks sum to n only on dangling-free graphs).
     Fixed iteration count — deterministic, driver controls convergence.
 
-    Shuffle discipline: CO-PARTITIONED by default at every size
-    (measured faster than the AQE/auto-broadcast plain loop even at
-    16.5k edges — see the comment above ``_pr_frames``; pass
-    ``copartition=False`` to opt out). ``links`` and ``verts`` are
-    hash-partitioned on vertex id
+    Shuffle discipline: CO-PARTITIONED at every size (paired warm
+    trials at sf0.1, 16.5k edges, measured it ~25% faster than an
+    AQE-on/auto-broadcast loop — per-iteration adaptive re-planning
+    and broadcast rebuilds cost more than a pinned pipeline).
+    ``links`` and ``verts`` are hash-partitioned on vertex id
     ONCE before the loop (``localCheckpoint`` pins the layout —
     LogicalRDD preserves outputPartitioning), every downstream frame
     inherits a compatible HashPartitioning, and each iteration pays
@@ -369,24 +368,20 @@ def pagerank(edges: DataFrame, iterations: int = 10,
     instead of re-shuffling the static link table every round — at
     100 TB the link table is the big side and re-shuffling it would
     dominate the algorithm (plan-asserted in
-    tests/test_graph_algos.py). AQE is disabled inside co-partitioned
-    mode only: under AQE a checkpointed frame's outputPartitioning is
+    tests/test_graph_algos.py). AQE is disabled for the loop: under
+    AQE a checkpointed frame's outputPartitioning is
     Unknown (the adaptive plan's final layout isn't knowable when the
     LogicalRDD is captured), which would silently re-insert BOTH
     per-iteration exchanges; the explicit partition sizing (one
     partition per ~250k edges, capped at the session's shuffle
     parallelism) does the work AQE's coalescing otherwise would.
     """
-    return _pr_run(edges, copartition,
-                   lambda e, np: _pagerank_loop(
-                       e, np, iterations, damping,
-                       weighted=weight_col is not None),
-                   weight_col=weight_col)
+    return _pr_run(edges, iterations, damping, weight_col=weight_col)
 
 
 def personalized_pagerank(edges: DataFrame, sources,
-                          iterations: int = 10, damping: float = 0.85,
-                          copartition: Optional[bool] = None) -> DataFrame:
+                          iterations: int = 10,
+                          damping: float = 0.85) -> DataFrame:
     """Personalized PageRank: the teleport vector is uniform over the
     SOURCE set instead of all vertices, so rank_v scores proximity to
     the sources — the standard recommendation / local-community /
@@ -398,11 +393,11 @@ def personalized_pagerank(edges: DataFrame, sources,
     absorb mass, matching ``pagerank``'s convention. Fixed iteration
     count — deterministic.
 
-    Shares ``pagerank``'s scale discipline via ``_pr_run``: the same
-    co-partitioned one-Exchange-per-iteration loop above the edge
-    threshold. ``sources`` ships in the plan as an ``isin`` literal
-    list — the personalized query shape has small |S| (a user, a
-    session's entities); for set-valued sources at scale, join a
+    Runs ``pagerank``'s loop with ``u`` as the per-vertex teleport
+    weight, so it shares the co-partitioned one-Exchange-per-iteration
+    layout at every size. ``sources`` ships in the plan as an ``isin``
+    literal list — the personalized query shape has small |S| (a user,
+    a session's entities); for set-valued sources at scale, join a
     reset frame instead.
     """
     if not isinstance(sources, (list, tuple, set, frozenset)):
@@ -410,16 +405,16 @@ def personalized_pagerank(edges: DataFrame, sources,
     src = sorted({int(x) for x in sources})
     if not src:
         raise ValueError("personalized_pagerank needs >= 1 source vertex")
-    return _pr_run(edges, copartition,
-                   lambda e, np: _ppr_loop(e, np, src, iterations, damping))
+    return _pr_run(edges, iterations, damping, sources=src)
 
 
-def _pr_run(edges: DataFrame, copartition: Optional[bool], loop,
-            weight_col: Optional[str] = None) -> DataFrame:
-    """Shared scaffold for the PageRank-family loops: normalize the
-    edge list, pick plain vs co-partitioned mode on edge count, and in
-    co-partitioned mode pin AQE off + shuffle.partitions == nparts for
-    the loop's duration (see ``pagerank``'s docstring for why)."""
+def _pr_run(edges: DataFrame, iterations: int, damping: float,
+            weight_col: Optional[str] = None,
+            sources: Optional[list] = None) -> DataFrame:
+    """Shared scaffold for the PageRank family: normalize the edge
+    list, size nparts on edge count, and pin AQE off + shuffle.partitions
+    == nparts for the loop's duration (see ``pagerank``'s docstring for
+    why)."""
     s, d = _pair_cols(edges)
     spark = edges.sparkSession
     cols = [F.col(s).cast("long").alias("src"),
@@ -437,31 +432,51 @@ def _pr_run(edges: DataFrame, copartition: Optional[bool], loop,
         e = e.withColumn("w", F.coalesce(F.col("w"), F.lit(0.0)))
     e = e.localCheckpoint(eager=True)
     n_edges = e.count()
-    if copartition is None:
-        copartition = True
-    if not copartition:
-        return loop(e, None)
-    cap = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    nparts = max(1, min(cap, -(-n_edges // 250_000)))
+    sp_was = spark.conf.get("spark.sql.shuffle.partitions", "200")
+    nparts = max(1, min(int(sp_was), -(-n_edges // 250_000)))
     aqe_was = spark.conf.get("spark.sql.adaptive.enabled", "true")
     # shuffle.partitions must equal nparts for the loop: the groupBy
     # re-key otherwise lands on a different partition count than the
     # pinned verts/links layout and the join re-shuffles verts anyway
-    sp_was = spark.conf.get("spark.sql.shuffle.partitions", "200")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.conf.set("spark.sql.shuffle.partitions", str(nparts))
     try:
-        return loop(e, nparts)
+        return _pagerank_loop(e, nparts, iterations, damping,
+                              weighted=weight_col is not None,
+                              sources=sources)
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
         spark.conf.set("spark.sql.shuffle.partitions", sp_was)
 
 
-def _pagerank_loop(e: DataFrame, nparts: Optional[int],
-                   iterations: int, damping: float,
-                   weighted: bool = False) -> DataFrame:
+def _pagerank_loop(e: DataFrame, nparts: int, iterations: int,
+                   damping: float, weighted: bool = False,
+                   sources: Optional[list] = None) -> DataFrame:
     verts, links = _pr_frames(e, nparts, weighted=weighted)
-    ranks = verts.withColumn("rank", F.lit(1.0))
+    if sources is None:
+        reset = F.lit(1.0)
+    else:
+        # Sources absent from the edge list (isolated or typo'd ids)
+        # would otherwise silently vanish from the vertex universe —
+        # their teleport mass dropping to zero EVERYWHERE and the caller
+        # getting an all-zero "result" with no error. Union them in
+        # explicitly: an isolated source ranks (1-d)/|S| (it keeps its
+        # own teleport share), which is the correct PPR fixed point.
+        src_df = e.sparkSession.createDataFrame([(s,) for s in sources],
+                                                "id LONG")
+        missing = src_df.join(verts, "id", "left_anti")
+        if missing.count() > 0:
+            verts = (verts.unionByName(missing)
+                     .repartition(nparts, F.col("id"))
+                     .localCheckpoint(eager=True))
+        reset = (F.when(F.col("id").isin(sources),
+                        F.lit(1.0 / len(sources)))
+                 .otherwise(F.lit(0.0)))
+    # withColumn after the checkpoint is a narrow projection — the
+    # pinned HashPartitioning survives, so the loop's join side stays
+    # Exchange-free
+    verts = verts.withColumn("reset", reset)
+    ranks = verts.select("id", F.col("reset").alias("rank"))
     # Two lazy steps per checkpoint: the composed 2-iteration plan runs
     # as one job, halving driver barriers; lineage stays O(1) via the
     # per-round checkpoint.
@@ -476,57 +491,6 @@ def _pagerank_loop(e: DataFrame, nparts: Optional[int],
             done += 1
         ranks = ranks.localCheckpoint(eager=True)
     return ranks
-
-
-def _ppr_loop(e: DataFrame, nparts: Optional[int], sources: list,
-              iterations: int, damping: float) -> DataFrame:
-    verts, links = _pr_frames(e, nparts)
-    # Sources absent from the edge list (isolated or typo'd ids) would
-    # otherwise silently vanish from the vertex universe — their
-    # teleport mass dropping to zero EVERYWHERE and the caller getting
-    # an all-zero "result" with no error. Union them in explicitly:
-    # an isolated source ranks (1-d)/|S| (it keeps its own teleport
-    # share), which is the correct PPR fixed point for it.
-    spark = e.sparkSession
-    src_df = spark.createDataFrame([(int(s),) for s in sources], "id LONG")
-    missing = src_df.join(verts, "id", "left_anti")
-    if missing.count() > 0:
-        verts = verts.unionByName(missing)
-        if nparts:
-            verts = verts.repartition(nparts, F.col("id"))
-        verts = verts.localCheckpoint(eager=True)
-    # withColumn after the checkpoint is a narrow projection — the
-    # pinned HashPartitioning survives, so the loop's join side stays
-    # Exchange-free in co-partitioned mode, exactly as in _pagerank_loop
-    w = 1.0 / len(sources)
-    verts = verts.withColumn(
-        "reset", F.when(F.col("id").isin(sources), F.lit(w))
-                  .otherwise(F.lit(0.0)))
-    ranks = verts.select("id", F.col("reset").alias("rank"))
-    done = 0
-    while done < iterations:
-        ranks = _ppr_step(verts, links, ranks, damping)
-        if done + 1 < iterations:
-            ranks = _ppr_step(verts, links, ranks, damping)
-            done += 2
-        else:
-            done += 1
-        ranks = ranks.localCheckpoint(eager=True)
-    return ranks.select("id", "rank")
-
-
-def _ppr_step(verts: DataFrame, links: DataFrame, r: DataFrame,
-              damping: float) -> DataFrame:
-    """One personalized-PageRank iteration (pure plan — no action)."""
-    contribs = (links.join(r, links["src"] == r["id"])
-                .select(F.explode("nbrs").alias("id"),
-                        (F.col("rank") / F.size("nbrs")).alias("c"))
-                .groupBy("id").agg(F.sum("c").alias("c")))
-    return (verts.join(contribs, "id", "left")
-            .select("id",
-                    (F.lit(1.0 - damping) * F.col("reset")
-                     + F.lit(damping) * F.coalesce("c", F.lit(0.0))
-                     ).alias("rank")))
 
 
 def label_propagation(edges: DataFrame, iterations: int = 5) -> DataFrame:
@@ -1006,39 +970,79 @@ def walk_skipgram_pairs(walks: DataFrame, window: int = 2) -> DataFrame:
                      .alias("dist")))
 
 
-def _exact_out_dists(e: DataFrame, max_hops: int) -> DataFrame:
-    """All-pairs bounded BFS: ``(root, node, d)`` with d = min number
-    of OUT-edge hops root→node (d = 0 for root itself), d ≤ max_hops.
-
-    This is the EXACT-oracle substrate behind ``exact=True`` on the
-    HyperBall family — level-synchronous frontier expansion with an
-    anti-join against settled pairs, the same loop shape as
-    ``traversal.bfs_distances`` but rooted at every vertex at once.
-    State is O(Σ ball sizes) rows, i.e. up to V² — deliberately NOT
-    the 100 TB path (that's the HLL sketches); it exists so the
-    sketch estimators have a driver-checkable ground truth.
-    """
+def _out_graph(edges: DataFrame) -> tuple:
+    """(e, verts): the pinned ``(src, dst)`` LONG edge list without
+    null endpoints, and its distinct vertex ids."""
+    s, d = _pair_cols(edges)
+    e = (edges.select(F.col(s).cast("long").alias("src"),
+                      F.col(d).cast("long").alias("dst"))
+         .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
+         .localCheckpoint(eager=True))
     verts = (e.select(F.col("src").alias("id"))
              .unionAll(e.select(F.col("dst").alias("id")))
              .distinct())
-    dist = (verts.select(F.col("id").alias("root"),
-                         F.col("id").alias("node"),
-                         F.lit(0).alias("d"))
-            .localCheckpoint(eager=True))
-    frontier = dist
+    return e, verts
+
+
+def _hyperball(e: DataFrame, verts: DataFrame, max_hops: int,
+               lgk: int) -> tuple:
+    """The HyperBall superstep loop (Boldi & Vigna, 2013) shared by
+    ``neighborhood_function``, ``harmonic_centrality`` and
+    ``closeness_centrality``.
+
+    Returns ``(balls, totals)``. ``balls`` holds one row per vertex:
+    ``(id, sk, est, harm, sumd)`` with ``sk`` the HLL sketch of the
+    vertex's OUT-ball, ``est`` its size estimate, ``harm`` = Σ Δ|B(v,h)|/h
+    and ``sumd`` = Σ Δ|B(v,h)|·h. ``totals[h]`` = Σ_v |B(v,h)| for every
+    hop until saturation (``totals[0]`` = n vertices).
+
+    100 TB shape: per-vertex state is ONE fixed-size HLL register array
+    (Spark's DataSketches ``hll_sketch_agg``, 2^lgk registers) plus
+    three doubles, never a reachable set — n·2^lgk bytes regardless of
+    ball sizes. Each hop is one frontier join (sketches flow dst→src so
+    balls grow along OUT-edges) and one ``hll_union_agg`` groupBy,
+    hash-keyed on vertex id with map-side partial merging, then one
+    ``localCheckpoint``. The running sums ride the aggregate as max()
+    (neighbor rows carry NULLs, so max() picks the one self row — no
+    extra join). Per-hop deltas inherit HLL error (~1.04/√2^lgk) and
+    are clamped at 0. The loop stops when the total did not grow: every
+    ball saturated, or an HLL estimate jittered downward, which keeps
+    ``totals`` monotone.
+    """
+    balls = (verts.groupBy("id")
+             .agg(F.hll_sketch_agg("id", F.lit(lgk)).alias("sk"))
+             .select("id", "sk",
+                     F.lit(1.0).alias("est"),      # |B(v,0)| = 1
+                     F.lit(0.0).alias("harm"),
+                     F.lit(0.0).alias("sumd"))
+             .localCheckpoint(eager=True))
+    totals = [float(balls.count())]
+    if not totals[0]:
+        return balls, totals
+    null = F.lit(None).cast("double")
     for h in range(1, max_hops + 1):
-        nxt = (frontier.join(e, frontier["node"] == e["src"])
-               .select("root", e["dst"].alias("node"),
-                       F.lit(h).alias("d"))
-               .distinct()
-               .join(dist.select("root", "node"), ["root", "node"],
-                     "left_anti")
-               .localCheckpoint(eager=True))
-        if nxt.isEmpty():
+        # ball_v(h) = ball_v(h-1) ∪ ⋃_{(v,w)∈E} ball_w(h-1)
+        from_nbrs = (e.join(balls, e["dst"] == balls["id"])
+                     .select(e["src"].alias("id"), "sk", null.alias("est"),
+                             null.alias("harm"), null.alias("sumd")))
+        merged = (balls.unionAll(from_nbrs)
+                  .groupBy("id")
+                  .agg(F.hll_union_agg("sk", True).alias("sk"),
+                       F.max("est").alias("est_prev"),
+                       F.max("harm").alias("harm"),
+                       F.max("sumd").alias("sumd")))
+        est = F.hll_sketch_estimate("sk").cast("double")
+        delta = F.greatest(est - F.col("est_prev"), F.lit(0.0))
+        balls = (merged.select(
+            "id", "sk", est.alias("est"),
+            (F.col("harm") + delta / F.lit(float(h))).alias("harm"),
+            (F.col("sumd") + delta * F.lit(float(h))).alias("sumd"))
+            .localCheckpoint(eager=True))
+        tot = float(balls.agg(F.sum("est").alias("t")).first()["t"])
+        if tot <= totals[-1]:
             break
-        dist = dist.unionAll(nxt).localCheckpoint(eager=True)
-        frontier = nxt
-    return dist
+        totals.append(tot)
+    return balls, totals
 
 
 def neighborhood_function(edges: DataFrame, max_hops: int = 8,
@@ -1055,69 +1059,31 @@ def neighborhood_function(edges: DataFrame, max_hops: int = 8,
     N(h) ≥ 0.9·N(max_hops), and the average distance from successive
     differences.
 
-    100 TB shape: per-vertex state is ONE fixed-size HLL register
-    array (Spark's DataSketches `hll_sketch_agg`, 2^lgk registers),
-    not a reachable set — the whole iteration keeps n·2^lgk bytes
-    regardless of ball sizes. Each round is one frontier join
-    (sketches flow dst→src so balls grow along OUT-edges) and one
-    `hll_union_agg` groupBy, hash-keyed on vertex id with map-side
-    partial merging; `localCheckpoint` truncates lineage per round.
-    Early-exits when N(h) stops growing (all balls saturated).
-    Estimates carry HLL error (~1.04/√2^lgk ≈ 1.6% at lgk=12); the
-    pytest checks them against exact all-pairs BFS within that bound.
+    Runs the ``_hyperball`` loop (see its docstring for the 100 TB
+    shape); N(h) is held at its last value once the total stops
+    growing. Estimates carry HLL error (~1.04/√2^lgk ≈ 1.6% at
+    lgk=12); the pytest checks them against exact all-pairs BFS within
+    that bound.
 
     ``exact=True`` swaps the sketches for an exact bounded all-pairs
-    BFS (``_exact_out_dists`` — O(Σ ball) state, NOT the scale path):
-    identical output contract, zero estimation error, fully mirrorable
-    as a recursive-CTE SQL oracle. Use it for correctness gates and
-    small graphs; leave the default for production scale.
+    BFS (``traversal.bfs_distances`` rooted at every vertex — O(Σ ball)
+    state, NOT the scale path): identical output contract, zero
+    estimation error, fully mirrorable as a recursive-CTE SQL oracle.
+    Use it for correctness gates and small graphs; leave the default
+    for production scale.
     """
-    s, d = _pair_cols(edges)
-    e = (edges.select(F.col(s).cast("long").alias("src"),
-                      F.col(d).cast("long").alias("dst"))
-         .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-         .localCheckpoint(eager=True))
-    spark = edges.sparkSession
+    e, verts = _out_graph(edges)
     if exact:
-        dists = _exact_out_dists(e, max_hops)
-        by_d = {int(r["d"]): int(r["c"]) for r in
-                dists.groupBy("d").agg(F.count(F.lit(1)).alias("c"))
+        by_d = {int(r["dist"]): int(r["c"]) for r in
+                bfs_distances(e, verts, max_hops)
+                .groupBy("dist").agg(F.count(F.lit(1)).alias("c"))
                 .collect()}
-        out, run = [], 0
-        for h in range(max_hops + 1):
-            run += by_d.get(h, 0)
-            out.append((h, run))
-        return spark.createDataFrame(out, "hop INT, n_pairs LONG")
-    verts = (e.select(F.col("src").alias("id"))
-             .unionAll(e.select(F.col("dst").alias("id")))
-             .distinct())
-    balls = (verts.groupBy("id")
-             .agg(F.hll_sketch_agg("id", F.lit(lgk)).alias("sk"))
-             .localCheckpoint(eager=True))
-    n = balls.count()
-    spark = edges.sparkSession
-    if n == 0:                                   # empty graph: N(h) ≡ 0
-        return spark.createDataFrame(
-            [(h, 0) for h in range(max_hops + 1)], "hop INT, n_pairs LONG")
-    out = [(0, int(n))]
-    prev = int(n)
-    for h in range(1, max_hops + 1):
-        # ball_v(h) = ball_v(h-1) ∪ ⋃_{(v,w)∈E} ball_w(h-1)
-        from_nbrs = (e.join(balls, e["dst"] == balls["id"])
-                     .select(e["src"].alias("id"), "sk"))
-        balls = (balls.select("id", "sk").unionAll(from_nbrs)
-                 .groupBy("id")
-                 .agg(F.hll_union_agg("sk", True).alias("sk"))
-                 .localCheckpoint(eager=True))
-        total = int(balls.select(
-            F.coalesce(F.sum(F.hll_sketch_estimate("sk")), F.lit(0))
-            .alias("t")).first()["t"])
-        out.append((h, total))
-        if total == prev:        # every ball saturated — done early
-            out.extend((hh, total) for hh in range(h + 1, max_hops + 1))
-            break
-        prev = total
-    return spark.createDataFrame(out, "hop INT, n_pairs LONG")
+        totals = list(accumulate(by_d.get(h, 0)
+                                 for h in range(max_hops + 1)))
+    else:
+        totals = [int(t) for t in _hyperball(e, verts, max_hops, lgk)[1]]
+    out = [(h, totals[min(h, len(totals) - 1)]) for h in range(max_hops + 1)]
+    return edges.sparkSession.createDataFrame(out, "hop INT, n_pairs LONG")
 
 
 def harmonic_centrality(edges: DataFrame, max_hops: int = 8,
@@ -1135,73 +1101,23 @@ def harmonic_centrality(edges: DataFrame, max_hops: int = 8,
 
     Returns ``(id, harmonic DOUBLE)``, one row per vertex.
 
-    100 TB shape: identical to ``neighborhood_function`` — one
-    fixed-size HLL register array per vertex (n·2^lgk bytes total
-    state, never materialized reachable sets), one frontier join and
-    one ``hll_union_agg`` groupBy per hop, both hash-keyed on vertex
-    id with map-side partial merging, ``localCheckpoint`` lineage
-    truncation per round, early exit when every ball saturates. The
-    running (est, harm) pair rides the aggregated frame as max()
-    aggregates (neighbor rows carry NULLs, so max() picks the one
-    self row — no extra join). Per-hop deltas inherit HLL error
-    (~1.04/√2^lgk) and are clamped at 0, since a sketch estimate can
-    jitter slightly downward between rounds; the pytest checks the
-    result against exact all-pairs BFS within that bound.
+    Runs the ``_hyperball`` loop (see its docstring for the 100 TB
+    shape) and projects its running Σ Δ/h; the pytest checks the
+    result against exact all-pairs BFS within HLL error.
 
     ``exact=True`` computes H(v) = Σ 1/d(v,u) from the exact bounded
-    all-pairs BFS (``_exact_out_dists``) instead of sketch deltas —
-    the driver-checkable oracle path, not the 100 TB path.
+    all-pairs BFS (``traversal.bfs_distances``) instead of sketch
+    deltas — the driver-checkable oracle path, not the 100 TB path.
     """
-    s, d = _pair_cols(edges)
-    e = (edges.select(F.col(s).cast("long").alias("src"),
-                      F.col(d).cast("long").alias("dst"))
-         .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-         .localCheckpoint(eager=True))
-    verts = (e.select(F.col("src").alias("id"))
-             .unionAll(e.select(F.col("dst").alias("id")))
-             .distinct())
+    e, verts = _out_graph(edges)
     if exact:
-        dists = _exact_out_dists(e, max_hops)
-        h = (dists.where(F.col("d") >= 1)
-             .groupBy("root")
-             .agg(F.sum(F.lit(1.0) / F.col("d")).alias("harmonic")))
-        return (verts.join(h, verts["id"] == h["root"], "left")
+        h = (bfs_distances(e, verts, max_hops).where(F.col("dist") >= 1)
+             .groupBy(F.col("start_id").alias("id"))
+             .agg(F.sum(F.lit(1.0) / F.col("dist")).alias("harmonic")))
+        return (verts.join(h, "id", "left")
                 .select("id", F.coalesce("harmonic", F.lit(0.0))
                         .alias("harmonic")))
-    balls = (verts.groupBy("id")
-             .agg(F.hll_sketch_agg("id", F.lit(lgk)).alias("sk"))
-             .select("id", "sk",
-                     F.lit(1.0).alias("est"),      # |B(v,0)| = 1
-                     F.lit(0.0).alias("harm"))
-             .localCheckpoint(eager=True))
-    spark = edges.sparkSession
-    n = balls.count()
-    if n == 0:
-        return spark.createDataFrame([], "id LONG, harmonic DOUBLE")
-    prev_tot = float(n)                          # Σ|B(v,0)| = n
-    for h in range(1, max_hops + 1):
-        from_nbrs = (e.join(balls, e["dst"] == balls["id"])
-                     .select(e["src"].alias("id"), "sk",
-                             F.lit(None).cast("double").alias("est"),
-                             F.lit(None).cast("double").alias("harm")))
-        merged = (balls.unionAll(from_nbrs)
-                  .groupBy("id")
-                  .agg(F.hll_union_agg("sk", True).alias("sk"),
-                       F.max("est").alias("est_prev"),
-                       F.max("harm").alias("harm")))
-        balls = (merged.select(
-            "id", "sk",
-            F.hll_sketch_estimate("sk").cast("double").alias("est"),
-            (F.col("harm")
-             + F.greatest(
-                 F.hll_sketch_estimate("sk") - F.col("est_prev"),
-                 F.lit(0.0)) / F.lit(float(h))).alias("harm"))
-            .localCheckpoint(eager=True))
-        # early exit: total estimate unchanged → every ball saturated
-        tot = float(balls.agg(F.sum("est").alias("t")).first()["t"])
-        if tot <= prev_tot:
-            break
-        prev_tot = tot
+    balls, _ = _hyperball(e, verts, max_hops, lgk)
     return balls.select("id", F.col("harm").alias("harmonic"))
 
 
@@ -1223,80 +1139,33 @@ def closeness_centrality(edges: DataFrame, max_hops: int = 8,
 
     Returns ``(id, closeness DOUBLE)``, one row per vertex.
 
-    100 TB shape: identical to ``harmonic_centrality`` — per-vertex
-    state is one fixed-size HLL register array plus two running
-    doubles (est, sumd = Σ h·Δ|B(v,h)|), one frontier join and one
-    ``hll_union_agg`` groupBy per hop, map-side partial merges,
-    ``localCheckpoint`` per round, early exit on saturation. Per-hop
-    deltas inherit HLL error and are clamped at 0.
+    Runs the ``_hyperball`` loop (see its docstring for the 100 TB
+    shape) and projects its running estimate and S(v) = Σ h·Δ|B(v,h)|.
 
     ``exact=True`` computes r(v)/S(v) from the exact bounded all-pairs
-    BFS (``_exact_out_dists``) — the driver-checkable oracle path, not
-    the 100 TB path.
+    BFS (``traversal.bfs_distances``) — the driver-checkable oracle
+    path, not the 100 TB path.
     """
-    s, d = _pair_cols(edges)
-    e = (edges.select(F.col(s).cast("long").alias("src"),
-                      F.col(d).cast("long").alias("dst"))
-         .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-         .localCheckpoint(eager=True))
-    verts = (e.select(F.col("src").alias("id"))
-             .unionAll(e.select(F.col("dst").alias("id")))
-             .distinct())
+    e, verts = _out_graph(edges)
     if exact:
         n = verts.count()
-        if n == 0:
-            return edges.sparkSession.createDataFrame(
-                [], "id LONG, closeness DOUBLE")
-        dists = _exact_out_dists(e, max_hops)
-        agg = (dists.where(F.col("d") >= 1)
-               .groupBy("root")
+        agg = (bfs_distances(e, verts, max_hops).where(F.col("dist") >= 1)
+               .groupBy(F.col("start_id").alias("id"))
                .agg(F.count(F.lit(1)).cast("double").alias("r"),
-                    F.sum("d").cast("double").alias("sumd")))
-        return (verts.join(agg, verts["id"] == agg["root"], "left")
+                    F.sum("dist").cast("double").alias("sumd")))
+        return (verts.join(agg, "id", "left")
                 .select(
                     "id",
                     F.when(F.coalesce("sumd", F.lit(0.0)) > 0.0,
                            F.col("r") * F.col("r")
                            / (F.lit(float(n)) * F.col("sumd")))
                      .otherwise(F.lit(0.0)).alias("closeness")))
-    balls = (verts.groupBy("id")
-             .agg(F.hll_sketch_agg("id", F.lit(lgk)).alias("sk"))
-             .select("id", "sk",
-                     F.lit(1.0).alias("est"),      # |B(v,0)| = 1
-                     F.lit(0.0).alias("sumd"))     # Σ d(v,·) so far
-             .localCheckpoint(eager=True))
-    spark = edges.sparkSession
-    n = balls.count()
-    if n == 0:
-        return spark.createDataFrame([], "id LONG, closeness DOUBLE")
-    prev_tot = float(n)
-    for h in range(1, max_hops + 1):
-        from_nbrs = (e.join(balls, e["dst"] == balls["id"])
-                     .select(e["src"].alias("id"), "sk",
-                             F.lit(None).cast("double").alias("est"),
-                             F.lit(None).cast("double").alias("sumd")))
-        merged = (balls.unionAll(from_nbrs)
-                  .groupBy("id")
-                  .agg(F.hll_union_agg("sk", True).alias("sk"),
-                       F.max("est").alias("est_prev"),
-                       F.max("sumd").alias("sumd")))
-        balls = (merged.select(
-            "id", "sk",
-            F.hll_sketch_estimate("sk").cast("double").alias("est"),
-            (F.col("sumd")
-             + F.greatest(
-                 F.hll_sketch_estimate("sk") - F.col("est_prev"),
-                 F.lit(0.0)) * F.lit(float(h))).alias("sumd"))
-            .localCheckpoint(eager=True))
-        tot = float(balls.agg(F.sum("est").alias("t")).first()["t"])
-        if tot <= prev_tot:
-            break
-        prev_tot = tot
+    balls, totals = _hyperball(e, verts, max_hops, lgk)
     r = F.greatest(F.col("est") - 1.0, F.lit(0.0))
     return balls.select(
         "id",
         F.when(F.col("sumd") > 0.0,
-               r * r / (F.lit(float(n)) * F.col("sumd")))
+               r * r / (F.lit(totals[0]) * F.col("sumd")))
          .otherwise(F.lit(0.0)).alias("closeness"))
 
 

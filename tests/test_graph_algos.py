@@ -75,23 +75,12 @@ def test_pagerank_star(spark):
     assert abs(ranks[0] - (0.15 + 0.85 * 5 * 0.15)) < 1e-9
 
 
-def test_pagerank_copartition_parity(spark):
-    # both shuffle disciplines compute the identical fixed point
-    e = spark.createDataFrame(
-        [(i, (i + 1) % 10) for i in range(10)] + [(0, 5), (3, 7)],
-        "u LONG, v LONG")
-    a = {r.id: r.rank for r in
-         pagerank(e, iterations=6, copartition=False).collect()}
-    b = {r.id: r.rank for r in
-         pagerank(e, iterations=6, copartition=True).collect()}
-    assert a.keys() == b.keys()
-    assert all(abs(a[k] - b[k]) < 1e-9 for k in a)
-
-
 def test_pagerank_copartitioned_step_single_exchange(spark):
     # The co-partitioned loop's per-iteration plan: links/verts pinned
     # to one HashPartitioning, so the only Exchange is the contribution
     # groupBy re-key — the static link table is NEVER re-shuffled.
+    # Holds for the plain step (reset = 1.0) and the personalized one
+    # (a non-constant reset column on verts) alike.
     # (Requires AQE off: under AQE a checkpointed frame's partitioning
     # is Unknown and both exchanges come back — the regression this
     # test guards.)
@@ -113,16 +102,22 @@ def test_pagerank_copartitioned_step_single_exchange(spark):
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
         verts, links = _pr_frames(e, nparts=4)
-        ranks = verts.withColumn("rank", F.lit(1.0)).localCheckpoint(
-            eager=True)
-        step = _pr_step(verts, links, ranks, 0.85)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            step.explain("formatted")
-        # count physical nodes: the formatted plan mentions each
-        # Exchange twice (tree line + "(n) Exchange" detail header)
-        n_ex = len(set(re.findall(r"\((\d+)\) Exchange", buf.getvalue())))
-        assert n_ex == 1, f"expected 1 Exchange per iteration, got {n_ex}"
+        for reset in (F.lit(1.0),
+                      F.when(F.col("id").isin([0, 7]), F.lit(0.5))
+                       .otherwise(F.lit(0.0))):
+            v = verts.withColumn("reset", reset)
+            ranks = v.select("id", F.col("reset").alias("rank")) \
+                .localCheckpoint(eager=True)
+            step = _pr_step(v, links, ranks, 0.85)
+            buf = io.StringIO()
+            with contextlib.redirect_stdout(buf):
+                step.explain("formatted")
+            # count physical nodes: the formatted plan mentions each
+            # Exchange twice (tree line + "(n) Exchange" detail header)
+            n_ex = len(set(re.findall(r"\((\d+)\) Exchange",
+                                      buf.getvalue())))
+            assert n_ex == 1, \
+                f"expected 1 Exchange per iteration, got {n_ex}"
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bc)
@@ -279,11 +274,6 @@ def test_personalized_pagerank_matches_reference_iteration(spark):
     got1 = {r.id: r.rank
             for r in personalized_pagerank(df, 1, iterations=12).collect()}
     assert got1[9] == 0.0
-
-    forced = {r.id: r.rank
-              for r in personalized_pagerank(df, [1], iterations=12,
-                                             copartition=True).collect()}
-    assert all(abs(forced[v] - got1[v]) < 1e-12 for v in nodes)
 
     # a source absent from the edge list joins the vertex universe and
     # keeps its own teleport share ((1-d)·1) instead of the whole
@@ -762,15 +752,20 @@ def test_weighted_pagerank_vs_power_iteration(spark):
     # reference: direct weighted power iteration (same GraphX-style
     # update: rank = (1-d) + d * sum(in_rank * w / out_weight))
     nodes = sorted({x for u, v, _ in wedges for x in (u, v)})
-    out_w = {}
-    for u, v, w in wedges:
-        out_w[u] = out_w.get(u, 0.0) + w
-    r = dict.fromkeys(nodes, 1.0)
-    for _ in range(12):
-        nxt = dict.fromkeys(nodes, 0.0)
+
+    def power_iteration(wedges, iterations):
+        out_w = {}
         for u, v, w in wedges:
-            nxt[v] += r[u] * w / out_w[u]
-        r = {v: 0.15 + 0.85 * nxt[v] for v in nodes}
+            out_w[u] = out_w.get(u, 0.0) + w
+        r = dict.fromkeys(nodes, 1.0)
+        for _ in range(iterations):
+            nxt = dict.fromkeys(nodes, 0.0)
+            for u, v, w in wedges:
+                nxt[v] += r[u] * w / out_w[u]
+            r = {v: 0.15 + 0.85 * nxt[v] for v in nodes}
+        return r
+
+    r = power_iteration(wedges, 12)
     for v in nodes:
         assert abs(got[v] - r[v]) < 1e-9, (v, got[v], r[v])
     # uniform weights reproduce the unweighted ranks
@@ -781,7 +776,9 @@ def test_weighted_pagerank_vs_power_iteration(spark):
                edges, "u LONG, v LONG"), iterations=6).collect()}
     wun = {r2.id: r2.rank
            for r2 in pagerank(uni, iterations=6, weight_col="w").collect()}
+    ref = power_iteration([(u, v, 1.0) for u, v in edges], 6)
     for v in nodes:
+        assert abs(unw[v] - ref[v]) < 1e-9, (v, unw[v], ref[v])
         assert abs(unw[v] - wun[v]) < 1e-9
 
 

@@ -2113,6 +2113,14 @@ def test_edit_distance_pairs_crafted(spark):
         (6, "tins"),          # short path, dist 1
         (7, "tin"),           # short path, dist 1/2
         (8, ""),              # empty string: length-band partner of short
+        # non-ASCII: é (U+00E9) and i share char-histogram bucket 9
+        # (codepoint mod 32); the CJK pair differs in one char, and 北
+        # and 南 both land in bucket 23, as does w
+        (9, "café"),
+        (10, "cafe"),
+        (11, "cafi"),
+        (12, "北京大学"),
+        (13, "南京大学"),
     ]
     df = spark.createDataFrame(rows, "doc_id LONG, text STRING")
     got = sorted((r.id1, r.id2, r.dist)
@@ -2139,7 +2147,7 @@ def test_edit_distance_pairs_randomized_matches_bruteforce(spark):
             s[p] = rng.choice("abcdefgh ")
         rows.append((100 + i, "".join(s)))
     df = spark.createDataFrame(rows, "doc_id LONG, text STRING")
-    for d, q in [(3, 2), (6, 3)]:
+    for d, q in [(0, 3), (3, 2), (6, 3)]:
         got = sorted((r.id1, r.id2, r.dist)
                      for r in edit_distance_pairs(df, max_dist=d,
                                                   q=q).collect())
